@@ -65,7 +65,11 @@ def quality_hash() -> Column:
     exchange. NULL note: xxhash64(NULL) is the seed (42), not NULL —
     harmless here because NULL/empty-text docs never satisfy the
     quality predicate, so they never enter the keep-first window or
-    the hash index."""
+    the hash index.
+
+    Corpus bound: expected collisions among n distinct texts are
+    ≈ n²/2⁶⁵ — ≈ 0.03 at n = 10⁹ documents, ≈ 3 at 10¹⁰. Each collision
+    drops one distinct document as a false duplicate."""
     return F.xxhash64(casefold("text"))
 
 

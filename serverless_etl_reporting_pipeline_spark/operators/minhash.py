@@ -47,7 +47,10 @@ def _shingle_sets(df: DataFrame, id_col: str, text_col: str, shingle_k: int) -> 
     which differ only under an xxhash64 collision inside one document
     pair's shingle sets (p ≈ n²/2⁶⁵ — immaterial next to the banding
     miss probability the threshold already budgets for, and absent
-    from every oracle-checked fixture).
+    from every oracle-checked fixture). Corpus bound: expected
+    collisions among n distinct ids are ≈ n²/2⁶⁵ — ≈ 0.03 at n = 10⁹,
+    ≈ 3 at 10¹⁰ — and only a collision inside one compared pair's sets
+    moves a Jaccard count, so the corpus-wide figure is an upper bound.
 
     Tokenize+explode is the CPU-heavy map stage; its parallelism is the
     SCAN's, not the shuffle's. A small corpus in one parquet file would
@@ -476,9 +479,18 @@ def neardup_components(
     # (t11 interleaved A/B: 177→198 tasks, +0.1-0.5 s wall) — so the
     # LIMIT probe stays; do not re-"fix" without beating those numbers.
     probe_src = pairs.select("id_a", "id_b").persist()
-    probe = probe_src.limit(_CC_DRIVER_CAP + 1).collect()
-    if len(probe) <= _CC_DRIVER_CAP:  # the limit returned the COMPLETE set
+    try:
+        probe = probe_src.limit(_CC_DRIVER_CAP + 1).collect()
+        if len(probe) > _CC_DRIVER_CAP:
+            # materialize the pair graph once — both union branches and
+            # every propagation round read it, and upstream is the whole
+            # MinHash pipeline (recomputing it per branch doubled t11's
+            # cost); the checkpoint reads the probe-cached partitions
+            # (see above) rather than recomputing the join subtree
+            pairs = probe_src.localCheckpoint()
+    finally:
         probe_src.unpersist()
+    if len(probe) <= _CC_DRIVER_CAP:  # the limit returned the COMPLETE set
         if stats is not None:
             stats["edges"] = len(probe)
             stats["iters"] = 0
@@ -504,13 +516,6 @@ def neardup_components(
             rows, f"id {id_type}, lbl {id_type}"
         )
 
-    # materialize the pair graph once — both union branches and every
-    # propagation round read it, and upstream is the whole MinHash
-    # pipeline (recomputing it per branch doubled t11's cost); the
-    # checkpoint reads the probe-cached partitions (see above) rather
-    # than recomputing the join subtree
-    pairs = probe_src.localCheckpoint()
-    probe_src.unpersist()
     if stats is not None:
         stats["edges"] = pairs.count()
         stats["iters"] = 0

@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 import tempfile
 import weakref
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -137,6 +138,7 @@ def spread_scan(df: DataFrame, key: str) -> DataFrame:
             want = max(1, -(-total // _spread_target_bytes()))
             target = min(target, want)
         if target <= len(files):
+            _SPREAD_FRAMES.add(df)
             return df
         out = df.repartition(target, F.col(key))
         _SPREAD_FRAMES.add(out)
@@ -157,7 +159,7 @@ def _local_file_bytes(files: list[str]) -> int | None:
     total = 0
     for uri in files:
         if uri.startswith("file:"):
-            path = uri[5:]
+            path = unquote(uri[5:])
             while path.startswith("//"):
                 path = path[1:]
         elif uri.startswith("/"):
@@ -190,13 +192,22 @@ def scoped_scratch_dir(root: str, app_id: str) -> str:
       an oracle check side by side) share the root while alive; only a
       crashed process leaks a dir past its lifetime, and those are
       exactly the old ones.
+    - heartbeat: every call touches this app's own dir (when it
+      exists). Nested parquet writes never refresh the top dir's
+      mtime, so without it a live app older than 24 h looks stale to a
+      newer process.
 
-    Registered once per (root, app_id); repeated calls are free."""
+    Registered once per (root, app_id); repeated calls only touch the
+    heartbeat."""
     import atexit
     import shutil
     import time
 
     own = os.path.join(root, app_id)
+    try:
+        os.utime(own)
+    except OSError:
+        pass  # not created yet
     key = (root, app_id)
     if key in _SCRATCH_HYGIENE_DONE:
         return own

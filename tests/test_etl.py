@@ -361,6 +361,7 @@ def test_spread_scan_semantics(spark, sf_dir, monkeypatch):
     oracle-checked, this pins the helper itself."""
     import os as _os
 
+    from serverless_etl_reporting_pipeline_spark.sources import reader
     from serverless_etl_reporting_pipeline_spark.sources.reader import (
         load_table,
         spread_scan,
@@ -373,13 +374,14 @@ def test_spread_scan_semantics(spark, sf_dir, monkeypatch):
     target = spark.sparkContext.defaultParallelism
 
     # (b) default target (64 KB): a tiny fixture scan stays unspread —
-    # the SAME frame comes back, no exchange at all
+    # the SAME frame comes back, no exchange at all, and is memoized
     if nbytes <= 64 * 1024:
         assert spread_scan(docs, "doc_id") is docs
+        assert docs in reader._SPREAD_FRAMES
 
     # (a) a 1-byte target demands more partitions than cores: capped
     monkeypatch.setenv("SPARK_GRAFT_SPREAD_TARGET_BYTES", "1")
-    spread = spread_scan(docs, "doc_id")
+    spread = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     assert spread.rdd.getNumPartitions() == target
     # no-op on an already-spread frame: the SAME object comes back
     assert spread_scan(spread, "doc_id") is spread
@@ -391,6 +393,18 @@ def test_spread_scan_semantics(spark, sf_dir, monkeypatch):
     assert sorted(r["doc_id"] for r in spread.collect()) == sorted(
         r["doc_id"] for r in docs.collect()
     )
+
+
+def test_local_file_bytes_unquotes_file_uris(tmp_path):
+    """inputFiles() percent-encodes paths; a space must still be sized,
+    not fall back to the core-count spread width."""
+    from serverless_etl_reporting_pipeline_spark.sources.reader import _local_file_bytes
+
+    d = tmp_path / "a b"
+    d.mkdir()
+    (d / "x.parquet").write_bytes(b"0123456789")
+    assert _local_file_bytes([f"file:{tmp_path}/a%20b/x.parquet"]) == 10
+    assert _local_file_bytes([f"file://{tmp_path}/a%20b/x.parquet"]) == 10
 
 
 def test_e08_synthetic_cdc_edges(spark, tmp_path):
@@ -540,3 +554,28 @@ def test_scoped_scratch_dir_hygiene(tmp_path):
     os.makedirs(own, exist_ok=True)
     shutil.rmtree(own, ignore_errors=True)  # what the hook runs
     assert not os.path.exists(own)
+
+
+def test_scoped_scratch_dir_heartbeat(tmp_path):
+    """A live app older than the stale cutoff keeps its dir: every call
+    refreshes its own dir's mtime, so a newer process reaps only the
+    dead sibling."""
+    import os
+    import time
+
+    from serverless_etl_reporting_pipeline_spark.sources import reader
+
+    root = str(tmp_path / "scratch")
+    own = reader.scoped_scratch_dir(root, "app-live")
+    dead = os.path.join(root, "app-dead")
+    os.makedirs(own)
+    os.makedirs(dead)
+    stale = time.time() - 25 * 3600
+    for d in (own, dead):
+        os.utime(d, (stale, stale))
+
+    assert reader.scoped_scratch_dir(root, "app-live") == own
+    assert os.path.getmtime(own) > time.time() - 60
+    reader.scoped_scratch_dir(root, "app-newer")
+    assert os.path.exists(own), "live app's dir must survive"
+    assert not os.path.exists(dead), "stale sibling must be reaped"
