@@ -68,7 +68,9 @@ def incremental_extract(df: DataFrame, ts_col: str, store: FileWatermarkStore) -
     Returns (new_rows, commit). Call ``commit()`` only after the batch
     has been durably written — the watermark then advances to the max
     event time of the batch, so a crash between write and commit means
-    reprocessing (at-least-once), never loss.
+    reprocessing (at-least-once), never loss. A caller that observed
+    that maximum on the write passes it, ``commit(max_ts)``, and saves
+    the aggregate job ``commit()`` runs to find it.
     """
     wm = store.read()
     # ntz_lit: a naive-datetime literal would be read through the
@@ -85,9 +87,11 @@ class _Commit:
         self._store = store
         self._prev = prev
 
-    def __call__(self) -> datetime | None:
-        row = self._df.agg(F.max(self._ts_col).alias("wm")).collect()[0]
-        new_wm = row["wm"]
+    def __call__(self, new_wm: datetime | None = None) -> datetime | None:
+        """Store ``new_wm``, the batch's max event time when the caller
+        already observed it; without it, one aggregate job computes it."""
+        if new_wm is None:
+            new_wm = self._df.agg(F.max(self._ts_col).alias("wm")).collect()[0]["wm"]
         if new_wm is None:  # empty batch: watermark unchanged
             return self._prev
         assert self._prev is None or new_wm >= self._prev, "watermark must be monotonic"

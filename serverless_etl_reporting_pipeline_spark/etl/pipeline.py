@@ -13,7 +13,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 from serverless_etl_reporting_pipeline_spark.etl.dims import extract_dims
 from serverless_etl_reporting_pipeline_spark.etl.extract import FileWatermarkStore, incremental_extract
@@ -33,28 +34,33 @@ def run_pipeline(
     state_path: str,
     write_dims: bool = False,
 ) -> PipelineResult:
-    """Incremental extract → clean → (dims) → partitioned append → commit.
+    """Incremental extract → clean → partitioned append → (dims) → commit.
 
     ``raw`` is any DataFrame-shaped source (JDBC, parquet, …) with the
-    RAW_TRANSACTIONS_SCHEMA columns. Early-exits on an empty increment
-    (reference `pipeline.py:13-16`).
+    RAW_TRANSACTIONS_SCHEMA columns. The fact write carries an
+    ``Observation`` of the increment's row count and max event time, so
+    neither needs a job of its own: 3 jobs for the fact write and 2 per
+    dim, 7 per run with dims (13 with a separate probe, count and max).
+    An empty increment (reference `pipeline.py:13-16`) writes no data
+    file and leaves the dims and the watermark untouched.
     """
     store = FileWatermarkStore(state_path)
     cleaned = clean_transactions(raw)
     increment, commit = incremental_extract(cleaned, "at", store)
 
-    if increment.isEmpty():  # cheap: limit-1 scan, not a count
-        return PipelineResult(rows_written=0, watermark=store.read())
-
     increment = increment.cache()  # consumed by fact write (+ dims)
     try:
-        write_partitioned(increment, lake_path, ts_col="at", mode="append")
+        seen = Observation()
+        observed = increment.observe(seen, F.count(F.lit(1)).alias("n"), F.max("at").alias("wm"))
+        write_partitioned(observed, lake_path, ts_col="at", mode="append")
+        n = seen.get["n"]
+        if n == 0:
+            return PipelineResult(rows_written=0, watermark=store.read())
         if write_dims:
             dim_trucks, dim_payments = extract_dims(increment)
             write_dim(dim_trucks, f"{lake_path}_dim_trucks")
             write_dim(dim_payments, f"{lake_path}_dim_payment_methods")
-        n = increment.count()
-        wm = commit()  # advance watermark only after a durable write
+        wm = commit(seen.get["wm"])  # advance watermark only after a durable write
     finally:
         increment.unpersist()
     return PipelineResult(rows_written=n, watermark=wm)

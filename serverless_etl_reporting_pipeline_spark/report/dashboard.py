@@ -8,6 +8,14 @@ reference never gets), `cache()` it, and run each panel as a small
 aggregation job over the cached data. `unpersist()` when the filter
 state changes.
 
+The ordered panels (`by_column`, `daily_trend`) gather their group rows
+into one partition before the sort: a sort over a single partition
+needs no range-partition sampling job, so each runs 3 jobs (aggregate
+shuffle, gather shuffle, sorted result), not 4. The final aggregate
+still runs in parallel; only its result rows, one per group, move to
+the sorting task. (`coalesce(1)` would instead pull the final aggregate
+itself into one task.)
+
 At 100 TB the cache holds only the filtered slice (columnar, compressed
 in executor memory); panels are partial+final hash aggregates over it.
 """
@@ -73,6 +81,7 @@ class Dashboard:
                 money_sum(self.amount).alias("revenue"),
                 money_avg(self.amount).alias("avg_transaction"),
             )
+            .repartition(1)
             .orderBy(F.desc("revenue"))
         )
 
@@ -80,6 +89,7 @@ class Dashboard:
         return (
             self.df.groupBy(date_col)
             .agg(F.count("*").alias("transactions"), money_sum(self.amount).alias("revenue"))
+            .repartition(1)
             .orderBy(date_col)
         )
 

@@ -13,6 +13,9 @@ driver contract, ETL jobs) runs with the same semantics:
   real cluster this would be ~2-3x total cores (AQE coalesces down).
 - Arrow enabled — all Python-side exchange (Pandas UDFs, createDataFrame)
   goes through Arrow batches, never per-row pickling.
+- Python workers get the package root on ``spark.executorEnv.PYTHONPATH``
+  (merged into any value passed in ``extra_conf``), so kernels that
+  import the engine work from any working directory.
 - Generated-class cache sized to the engine's working set
   (``CODEGEN_CACHE_ENTRIES``): one pass of the query registry compiles
   ~1540 distinct classes, far more than Spark's default 100-entry cache
@@ -41,6 +44,20 @@ APP_NAME = "serverless-etl-reporting-pipeline-spark"
 #   ingest    294 -> 27,       cpu_s 47.9 -> 36.3 s (10 pairs)
 #   curation  147-154 -> 0-4,  cpu_s 40.2 -> 32.5 s (8 pairs)
 CODEGEN_CACHE_ENTRIES = 2000
+
+
+# Python workers start with the executor env's PYTHONPATH, not the
+# driver's sys.path: without the package root there, a mapInPandas kernel
+# that imports the engine fails whenever the driver found the package
+# only through sys.path (a tool run from another working directory).
+WORKER_PYTHONPATH_CONF = "spark.executorEnv.PYTHONPATH"
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def worker_pythonpath(existing: str) -> str:
+    """``existing`` with the package root appended unless already there."""
+    parts = [p for p in existing.split(os.pathsep) if p]
+    return os.pathsep.join(parts if PACKAGE_ROOT in parts else parts + [PACKAGE_ROOT])
 
 
 def default_parallelism() -> int:
@@ -78,7 +95,9 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
-    for k, v in (extra_conf or {}).items():
+    extra = dict(extra_conf or {})
+    extra[WORKER_PYTHONPATH_CONF] = worker_pythonpath(extra.get(WORKER_PYTHONPATH_CONF, ""))
+    for k, v in extra.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -17,6 +17,7 @@ import weakref
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -69,10 +70,34 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# Inferred table schemas per session, keyed by (path, size, mtime_ns):
+# a rewritten file gets a new key. The session is part of the key because
+# inference depends on its confs, and the driver contract reads through
+# its own session, built without the engine's.
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, int, int], StructType]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one table. Parquet schema inference costs a Spark job; it runs
+    on the first read of each file version in a session, and every later
+    read passes the cached schema to ``spark.read.schema`` and launches
+    0 jobs. Registry queries call this once per table they scan."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    return spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local file: no version to key on
+        return spark.read.parquet(path)
+    key = (path, st.st_size, st.st_mtime_ns)
+    schemas = _SCHEMAS.setdefault(spark, {})
+    if key in schemas:
+        return spark.read.schema(schemas[key]).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[key] = df.schema
+    return df
 
 
 # Frames spread_scan already returned; a repeated call on the same output

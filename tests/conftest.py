@@ -21,3 +21,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF_SMOKE)
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(f)`` runs ``f`` and returns ``(jobs, f())``: the
+    number of Spark jobs the DAG scheduler started meanwhile."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def run(f):
+        before = dag.numTotalJobs()
+        out = f()
+        return dag.numTotalJobs() - before, out
+
+    return run

@@ -166,6 +166,39 @@ def test_incremental_extract_empty_batch(spark, tmp_path):
     assert commit() == datetime(2030, 1, 1)  # unchanged on empty batch
 
 
+def test_pipeline_job_budget(spark, raw_df, tmp_path, count_jobs):
+    """The fact write observes the increment's count and max event time:
+    no probe, count or max job of their own (13 jobs before)."""
+    lake = str(tmp_path / "lake")
+    jobs, result = count_jobs(lambda: run_pipeline(raw_df, lake, str(tmp_path / "wm.txt"), write_dims=True))
+    assert result.rows_written == 4
+    assert result.watermark == clean_transactions(raw_df).agg(F.max("at")).first()[0]
+    assert jobs <= 7
+
+
+def test_pipeline_empty_increment_touches_nothing(spark, raw_df, tmp_path):
+    """A rerun on already-committed input writes no data file and leaves
+    the dims and the watermark file as they were."""
+    lake = str(tmp_path / "lake")
+    state = str(tmp_path / "wm.txt")
+    run_pipeline(raw_df, lake, state, write_dims=True)
+
+    def snapshot():
+        out = {}
+        for root in (lake, lake + "_dim_trucks", lake + "_dim_payment_methods"):
+            for d, _, files in os.walk(root):
+                for f in files:
+                    if f.endswith(".parquet"):
+                        out[os.path.join(d, f)] = os.stat(os.path.join(d, f)).st_mtime_ns
+        out[state] = (os.stat(state).st_mtime_ns, open(state).read())
+        return out
+
+    before = snapshot()
+    again = run_pipeline(raw_df, lake, state, write_dims=True)
+    assert again.rows_written == 0
+    assert snapshot() == before
+
+
 def test_compact_partitions_one_file_each(spark, sf_dir, tmp_path):
     """Fragmented appends collapse to one file per partition with
     identical data (small-files maintenance at 100 TB scale)."""
@@ -405,6 +438,26 @@ def test_local_file_bytes_unquotes_file_uris(tmp_path):
     (d / "x.parquet").write_bytes(b"0123456789")
     assert _local_file_bytes([f"file:{tmp_path}/a%20b/x.parquet"]) == 10
     assert _local_file_bytes([f"file://{tmp_path}/a%20b/x.parquet"]) == 10
+
+
+def test_load_table_infers_schema_once(spark, tmp_path, count_jobs):
+    """The schema inference job runs once per file version: a second
+    read of the same table launches no job, a rewritten file is
+    re-inferred."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "nation.parquet")
+    pq.write_table(pa.table({"n_nationkey": [1, 2], "n_name": ["A", "B"]}), path)
+    first_jobs, first = count_jobs(lambda: load_table(spark, str(tmp_path), "nation"))
+    assert first_jobs == 1
+    again_jobs, again = count_jobs(lambda: load_table(spark, str(tmp_path), "nation"))
+    assert again_jobs == 0
+    assert again.schema == first.schema == spark.read.parquet(path).schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+    pq.write_table(pa.table({"n_nationkey": [3], "n_name": ["C"], "n_comment": ["c"]}), path)
+    assert load_table(spark, str(tmp_path), "nation").columns == ["n_nationkey", "n_name", "n_comment"]
 
 
 def test_e08_synthetic_cdc_edges(spark, tmp_path):

@@ -24,3 +24,19 @@ def test_codegen_cache_keeps_repeated_plans(spark):
     seen = compiles.getCount()
     plan(0)
     assert compiles.getCount() == seen
+
+
+def test_python_workers_find_the_package(spark):
+    """Python workers get the package root on their PYTHONPATH, merged
+    into any value the caller set, so a kernel importing the engine
+    does not depend on the driver's working directory."""
+    import os
+
+    from serverless_etl_reporting_pipeline_spark.session import PACKAGE_ROOT, worker_pythonpath
+
+    conf = spark.sparkContext.getConf().get("spark.executorEnv.PYTHONPATH")
+    assert PACKAGE_ROOT in conf.split(os.pathsep)
+    assert os.path.isfile(os.path.join(PACKAGE_ROOT, "serverless_etl_reporting_pipeline_spark", "__init__.py"))
+    assert worker_pythonpath("") == PACKAGE_ROOT
+    assert worker_pythonpath(os.pathsep.join(["/a", "/b"])) == os.pathsep.join(["/a", "/b", PACKAGE_ROOT])
+    assert worker_pythonpath(PACKAGE_ROOT) == PACKAGE_ROOT
