@@ -550,32 +550,3 @@ def neardup_components(
         if changed == 0:
             break
     return labels
-
-
-def minhash_dedup_survivors(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    jaccard_threshold: float = 0.8,
-    transitive: bool = False,
-) -> DataFrame:
-    """Near-dup dedup with two survivor policies:
-
-    - greedy keep-lowest (default): drop every doc that has a DIRECT
-      near-duplicate with a lower id — one anti-join, no iteration;
-    - `transitive=True`: connected-components clustering
-      (`neardup_components`) — exactly one survivor (the min id) per
-      near-dup CLUSTER, so chains A~B~C collapse to A even when A and C
-      are not directly similar. Costs O(diameter) passes over the
-      candidate-pair graph.
-
-    The policies differ only on nodes all of whose direct neighbors are
-    larger but whose component min is smaller (V-shapes / chains).
-    """
-    pairs = minhash_neardup_pairs(df, id_col, text_col, jaccard_threshold)
-    if transitive:
-        comp = neardup_components(pairs)
-        losers = comp.filter(F.col("lbl") < F.col("id")).select(F.col("id").alias(id_col))
-    else:
-        losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")

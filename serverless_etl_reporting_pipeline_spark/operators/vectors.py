@@ -11,14 +11,16 @@ matmul) — Spark's array higher-order functions are interpreted
 (~µs/element) and are used only on tiny frames (cell centroids).
 
 Scale paths:
-- brute-force top-k: one map kernel + TakeOrderedAndProject — linear
-  scan, embarrassingly parallel, the right baseline even at 100 TB when
-  k is small and queries are few;
-- `ivf_topk` / `ann_topk_rp` / `ann_topk_lsh`: bucket-pruned variants
-  for repeated queries — scan only the probed cells/buckets;
+- single-query top-k: one scan core (`_scan_topk`) — an Arrow kernel
+  picks and exactly scores each batch's rows, then
+  TakeOrderedAndProject. `knn_bruteforce` scores every row (linear,
+  embarrassingly parallel, the right baseline even at 100 TB when k is
+  small and queries are few); `ann_topk_rp` / `ann_topk_e2lsh` keep
+  only the query's buckets and `ivf_topk` only its probed cells, for
+  repeated queries;
 - all-pairs ops (`top_similar_pairs`, `neardup_map`): unordered
-  block-pair grid join by default (no driver collect, arbitrary n);
-  broadcast build only as an opt-in small-N fast path.
+  block-pair grid join (no driver collect, arbitrary n). Every pair
+  kernel scores through one guarded cosine matrix (`_cosines`).
 """
 
 from __future__ import annotations
@@ -59,15 +61,6 @@ def quantized(col: Column | str) -> Column:
     return F.transform(as_double(col), lambda x: F.round(x * QUANT))
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Left-fold double dot product (matches DuckDB list_sum order)."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-
-
 def knn_bruteforce(
     df: DataFrame,
     query_vec_quantized: list[float],
@@ -79,8 +72,8 @@ def knn_bruteforce(
 
     Plans as scan → Arrow cosine kernel → TakeOrderedAndProject: no
     shuffle of the vectors, only k rows cross the network per partition.
-    The kernel is the same quantized BLAS path as the ANN variants
-    (`_stack_quantized`): exact integer arithmetic in float64, so the
+    The scan is the one the ANN variants share (`_scan_topk`), over
+    the quantized BLAS path: exact integer arithmetic in float64, so the
     result is bit-identical to the DuckDB quantized-double oracle. An
     earlier formulation used interpreted `zip_with`+`aggregate` folds —
     correct, but ~µs/element (4 s at sf0.1 vs <1 s for this kernel).
@@ -110,36 +103,71 @@ def knn_bruteforce(
         return df.sparkSession.createDataFrame([], f"{id_col} long, cos double")
     bc = df.sparkSession.sparkContext.broadcast((qq, qn))
 
+    def score(A):
+        q, qnorm = bc.value
+        an, valid = _norms(A)
+        return valid, (A[valid] @ q) / (an[valid] * qnorm)
+
+    top = _scan_topk(df, len(qq), k, id_col, vec_col, score)
+    return top.select(id_col, (F.round(F.col("_raw") * QUANT) / QUANT).alias("cos"))
+
+
+def _scan_topk(df, dim, k, id_col, vec_col, score, ascending=False):
+    """The one exact-ranking scan behind every single-query top-k
+    operator — the partition-local prune + exact rerank shape of REPOSE
+    (ICDE 2021). NULL and ragged rows never reach a kernel
+    (`_ids_vectors` with ``dim``); each Arrow batch is stacked by
+    `_stack_quantized`, and ``score(A) -> (keep, raw)`` picks the rows
+    its caller ranks (bucket/probe mask AND the caller's corrupt-row
+    guard) and scores exactly those. Only the ≤k best per partition
+    feed TakeOrderedAndProject on (_raw, id): descending, or ascending
+    for distances. Returns (id_col, _raw); callers round for output."""
+
     def kernel(batches):
         import numpy as _np
         import pandas as _pd
 
-        q, qnorm = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = _stack_quantized(pdf)
-            an = _np.sqrt((A * A).sum(axis=1))
-            valid = _np.isfinite(an) & (an > 0.0)
-            if not valid.any():
-                continue
-            Av = A[valid]
-            cos = (Av @ q) / (an[valid] * qnorm)
-            yield _pd.DataFrame(
-                {id_col: pdf["_id"].to_numpy(dtype=_np.int64)[valid], "_raw": cos}
-            )
+            keep, raw = score(_stack_quantized(pdf))
+            if keep.any():
+                ids = pdf["_id"].to_numpy(dtype=_np.int64)[keep]
+                yield _pd.DataFrame({id_col: ids, "_raw": raw})
 
-    out = _ids_vectors(df, id_col, vec_col, dim=len(qq)).mapInPandas(
-        kernel,
-        schema=T.StructType(
-            [T.StructField(id_col, T.LongType()), T.StructField("_raw", T.DoubleType())]
-        ),
+    out = _ids_vectors(df, id_col, vec_col, dim=dim).mapInPandas(
+        kernel, schema=f"{id_col} long, _raw double"
     )
-    return (
-        out.orderBy(F.desc("_raw"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, (F.round(F.col("_raw") * QUANT) / QUANT).alias("cos"))
-    )
+    order = F.asc("_raw") if ascending else F.desc("_raw")
+    return out.orderBy(order, F.asc(id_col)).limit(k)
+
+
+def _norms(A):
+    """Row norms and the valid mask every cosine kernel shares: a
+    zero-norm row has no defined cosine, and a NaN/Inf norm marks a
+    corrupt row (`quantize_np` maps NULL/NaN/Inf/extreme components to
+    NaN) — both are excluded, so no NaN ever reaches a comparison."""
+    import numpy as np
+
+    an = np.sqrt((A * A).sum(axis=1))
+    return an, np.isfinite(an) & (an > 0.0)
+
+
+def _cosines(A, B=None):
+    """Guarded cosine matrix of A's rows against B's (against A's own
+    when B is None) plus both valid masks (`_norms`): an invalid row
+    divides by 1 instead of 0 or NaN, and callers drop its scores with
+    the masks. Every pair kernel scores through this one operation
+    order, so their scores stay bit-identical."""
+    import numpy as np
+
+    an, va = _norms(A)
+    if B is None:
+        B, bn, vb = A, an, va
+    else:
+        bn, vb = _norms(B)
+    S = (A @ B.T) / (np.where(va, an, 1.0)[:, None] * np.where(vb, bn, 1.0)[None, :])
+    return S, va, vb
 
 
 def quantize_np(a):
@@ -267,20 +295,10 @@ def _collect_quantized_build(df: DataFrame, id_col: str, vec_col: str, dim: int 
     if not rows:
         return np.empty(0, dtype=np.int64), np.zeros((0, 0)), np.empty(0)
     ids = np.array([r["_id"] for r in rows], dtype=np.int64)
-
-    def to_f64(v):
-        # Row lists can carry None components (the NULL-component
-        # corrupt class) — map to NaN like quantize_np's fallback, so
-        # the norm below is NaN and the callers' `qn > 0` guards
-        # exclude the row exactly like the Arrow-side kernels do
-        try:
-            return np.asarray(v, dtype=np.float64)
-        except (TypeError, ValueError):
-            return np.asarray(
-                [np.nan if x is None else float(x) for x in v], dtype=np.float64
-            )
-
-    B = quantize_np(np.stack([to_f64(r["_qv"]) for r in rows]))
+    # quantize_np maps None components (Row lists can carry them) to
+    # NaN, so the norm is NaN and the callers' `qn > 0` guards exclude
+    # the row exactly like the Arrow-side kernels do
+    B = np.stack([quantize_np(r["_qv"]) for r in rows])
     return ids, B, np.sqrt((B * B).sum(axis=1))
 
 
@@ -326,8 +344,8 @@ def ivf_topk(
     hash aggregate — exact integer sums, any combine order agrees with
     the oracle; (2) probe choice as a tiny top-nprobe over n_cells rows;
     (3) a broadcast left-semi join prunes to the probed cells
-    (partition-prunable when the table is laid out by cell) and one
-    Arrow cosine kernel ranks the candidates.
+    (partition-prunable when the table is laid out by cell) and
+    `knn_bruteforce` ranks the candidates.
 
     Degenerate inputs (the `ivf_batch_probe` discipline): zero-norm
     centroids are never probed, zero-norm corpus vectors are excluded
@@ -338,18 +356,7 @@ def ivf_topk(
     filter below excludes them from both subtrees (oracle:
     len(embedding) = len(q) in the ex and e CTEs).
     """
-    import numpy as np
-
     qq_list = [float(x) for x in query_vec_quantized]
-    qq = np.asarray(qq_list, dtype=np.float64)
-    qn = float(np.sqrt(qq @ qq))
-    if not (np.isfinite(qn) and qn > 0.0):
-        # zero-norm (or NULL/NaN-component) query: no defined neighbors.
-        # Short-circuit BEFORE the probe ranking — its JVM cosine would
-        # raise DIVIDE_BY_ZERO under ANSI mode (the shingles-crash
-        # hazard class, r7 commit 61a3a72).
-        return df.sparkSession.createDataFrame([], f"{id_col} long, cos double")
-
     df = df.filter((F.size(vec_col) == len(qq_list)) & ~_has_corrupt_component(vec_col))
     ex = df.select(cell_col, F.posexplode(as_double(vec_col)).alias("dim", "x")).select(
         cell_col, "dim", F.round(F.col("x") * QUANT).alias("q")
@@ -374,41 +381,12 @@ def ivf_topk(
         .limit(nprobe)
         .select(cell_col)
     )
-
-    def cos_kernel(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        if qn == 0.0:
-            return  # zero-norm query: no defined neighbors, empty result
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = _stack_quantized(pdf)
-            an = _np.sqrt((A * A).sum(axis=1))
-            valid = _np.isfinite(an) & (an > 0.0)
-            if not valid.any():
-                continue
-            cos = (A[valid] @ qq) / (an[valid] * qn)
-            yield _pd.DataFrame(
-                {id_col: pdf["_id"].to_numpy(dtype=_np.int64)[valid], "_raw": cos}
-            )
-
-    out = (
-        df.join(F.broadcast(probed), cell_col, "left_semi")
-        .select(F.col(id_col).cast("long").alias("_id"), F.col(vec_col).alias("_qv"))
-        .mapInPandas(
-            cos_kernel,
-            schema=T.StructType(
-                [T.StructField(id_col, T.LongType()), T.StructField("_raw", T.DoubleType())]
-            ),
-        )
-    )
-    return (
-        out.orderBy(F.desc("_raw"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, (F.round(F.col("_raw") * QUANT) / QUANT).alias("cos"))
-    )
+    # a zero-norm (or NULL/NaN-component) query short-circuits inside
+    # knn_bruteforce on the driver, so this plan never runs for it — the
+    # probe ranking's JVM cosine would raise DIVIDE_BY_ZERO under ANSI
+    # mode (the shingles-crash hazard class)
+    candidates = df.join(F.broadcast(probed), cell_col, "left_semi")
+    return knn_bruteforce(candidates, qq_list, k, id_col, vec_col)
 
 
 _PAIRS_SCHEMA = T.StructType(
@@ -457,22 +435,14 @@ def _grid_pairs(
         import numpy as _np
         import pandas as _pd
 
-        empty = _pd.DataFrame({"id_a": [], "id_b": [], "raw_cos": []}).astype(
-            {"id_a": "int64", "id_b": "int64", "raw_cos": "float64"}
-        )
         if not len(pdf):
-            return empty
+            return _pd.DataFrame()  # Spark accepts a column-less empty group result
         lo, hi = int(key[0]), int(key[1])
         # zero-norm vectors have undefined cosine: they never pair (the
-        # semdedup_map valid-mask discipline) — no NaN reaches a compare
+        # `_cosines` valid masks) — no NaN reaches a compare
         if lo == hi:
-            A = _stack_quantized(pdf)
             ids = pdf["_id"].to_numpy(dtype=_np.int64)
-            an = _np.sqrt((A * A).sum(axis=1))
-            valid = _np.isfinite(an) & (an > 0.0)
-            S = (A @ A.T) / (
-                _np.where(valid, an, 1.0)[:, None] * _np.where(valid, an, 1.0)[None, :]
-            )
+            S, valid, _ = _cosines(_stack_quantized(pdf))
             ai, bi = _np.nonzero(
                 (ids[:, None] < ids[None, :]) & valid[:, None] & valid[None, :]
             )
@@ -481,16 +451,10 @@ def _grid_pairs(
             pa = pdf[pdf["_blk"] == lo]
             pb = pdf[pdf["_blk"] == hi]
             if not len(pa) or not len(pb):
-                return empty
-            A, B = _stack_quantized(pa), _stack_quantized(pb)
+                return _pd.DataFrame()
             aids = pa["_id"].to_numpy(dtype=_np.int64)
             bids = pb["_id"].to_numpy(dtype=_np.int64)
-            an = _np.sqrt((A * A).sum(axis=1))
-            bn = _np.sqrt((B * B).sum(axis=1))
-            va, vb = (_np.isfinite(an) & (an > 0.0)), (_np.isfinite(bn) & (bn > 0.0))
-            S = (A @ B.T) / (
-                _np.where(va, an, 1.0)[:, None] * _np.where(vb, bn, 1.0)[None, :]
-            )
+            S, va, vb = _cosines(_stack_quantized(pa), _stack_quantized(pb))
             pair_ok = (va[:, None] & vb[None, :]).ravel()
             xa = _np.repeat(aids, len(bids))[pair_ok]
             xb = _np.tile(bids, len(aids))[pair_ok]
@@ -532,9 +496,8 @@ def top_similar_pairs(
     comparator (-cos, id_a, id_b), and the plan takes the global top-k
     of ≤ k·m(m+1)/2 rows. NO driver-side collect of vectors and no
     broadcast build: memory per task is two blocks, so n is unbounded.
-    (The broadcast variant `top_similar_pairs_broadcast` remains as a
-    small-N fast path; an even earlier all-pairs join with per-pair
-    array folds ran ~25× slower at sf0.1.)
+    (An earlier all-pairs join with per-pair array folds ran ~25×
+    slower at sf0.1.)
 
     Exact all-pairs is O(n²) work no matter the engine — at data sizes
     where that's unpayable, switch to the LSH/IVF candidate paths.
@@ -547,59 +510,6 @@ def top_similar_pairs(
     q = _ids_vectors(df, id_col, vec_col, dim=dim or _dim_of(df, vec_col))
     m = grid_blocks if grid_blocks is not None else _grid_size(df)
     top = _grid_pairs(q, m, k=int(k))
-    return top.orderBy(F.desc("raw_cos"), "id_a", "id_b").limit(k)
-
-
-def top_similar_pairs_broadcast(
-    df: DataFrame,
-    k: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Broadcast-build variant of `top_similar_pairs`: collect + quantize
-    the full matrix driver-side (n·d·8 bytes — small-N interactive use
-    ONLY), stream the probe side through the same exact kernel. Produces
-    bit-identical results to the grid path (including the corrupt-row
-    contract: NULL and off-modal-dimension rows excluded)."""
-    spark = df.sparkSession
-    d = dim or _dim_of(df, vec_col)
-    q = _ids_vectors(df, id_col, vec_col, dim=d)
-    # build side only — the probe side never collects
-    bc = spark.sparkContext.broadcast(_collect_quantized_build(df, id_col, vec_col, dim=d))
-    kk = int(k)
-
-    def kernel(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        ids_b, Bm, bn = bc.value
-        # same valid-mask discipline as _grid_pairs: an Inf-component
-        # build row has bn = inf and would otherwise pair with NaN/inf
-        # scores that rank FIRST under the -cos lexsort
-        vb = _np.isfinite(bn) & (bn > 0.0)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = _stack_quantized(pdf)
-            aid = pdf["_id"].to_numpy(dtype=_np.int64)
-            an = _np.sqrt((A * A).sum(axis=1))
-            va = _np.isfinite(an) & (an > 0.0)
-            # zero-norm vectors never pair (undefined cosine) — the
-            # _grid_pairs valid-mask discipline, bit-identical results
-            S = (A @ Bm.T) / (
-                _np.where(va, an, 1.0)[:, None] * _np.where(vb, bn, 1.0)[None, :]
-            )
-            ai, bi = _np.nonzero(
-                (aid[:, None] < ids_b[None, :]) & va[:, None] & vb[None, :]
-            )
-            cos = S[ai, bi]
-            order = _np.lexsort((ids_b[bi], aid[ai], -cos))[:kk]
-            yield _pd.DataFrame(
-                {"id_a": aid[ai][order], "id_b": ids_b[bi][order], "raw_cos": cos[order]}
-            )
-
-    top = q.mapInPandas(kernel, schema=_PAIRS_SCHEMA)
     return top.orderBy(F.desc("raw_cos"), "id_a", "id_b").limit(k)
 
 
@@ -682,25 +592,15 @@ def neardup_pairs_lsh_banded(
         import numpy as _np
         import pandas as _pd
 
-        empty = _pd.DataFrame({"id_a": [], "id_b": [], "raw_cos": []}).astype(
-            {"id_a": "int64", "id_b": "int64", "raw_cos": "float64"}
-        )
         if len(pdf) < 2:
-            return empty
-        A = _stack_quantized(pdf)
+            return _pd.DataFrame()
         ids = pdf[id_col].to_numpy(dtype=_np.int64)
-        an = _np.sqrt((A * A).sum(axis=1))
         # zero-norm vectors never pair (undefined cosine) — the
-        # semdedup_map valid-mask discipline; no NaN reaches `>= tau`
-        valid = _np.isfinite(an) & (an > 0.0)
-        S = (A @ A.T) / (
-            _np.where(valid, an, 1.0)[:, None] * _np.where(valid, an, 1.0)[None, :]
-        )
+        # `_cosines` valid mask; no NaN reaches `>= tau`
+        S, valid, _ = _cosines(_stack_quantized(pdf))
         ai, bi = _np.nonzero(
             (ids[:, None] < ids[None, :]) & (S >= tau) & valid[:, None] & valid[None, :]
         )
-        if not len(ai):
-            return empty
         return _pd.DataFrame({"id_a": ids[ai], "id_b": ids[bi], "raw_cos": S[ai, bi]})
 
     pairs = fan.groupBy("_band", "_code").applyInPandas(pair_kernel, schema=_PAIRS_SCHEMA)
@@ -769,8 +669,8 @@ def ann_topk_rp(
     — then ranks candidates by exact quantized cosine. Deterministic:
     seeded hyperplanes, exact integer dots (BLAS f64 over integers, see
     `quantized`), no pyspark.ml RNG. Codes + cosine run in one Arrow
-    kernel (map-only, no shuffle); only the ≤k survivors per partition
-    feed TakeOrderedAndProject.
+    kernel (map-only, no shuffle; `_scan_topk`); only the ≤k survivors
+    per partition feed TakeOrderedAndProject.
 
     Degenerate inputs (the `ivf_batch_probe` discipline): zero-norm
     corpus vectors are excluded from the ranking (a zero vector's sign
@@ -794,40 +694,16 @@ def ann_topk_rp(
         return spark.createDataFrame([], f"{id_col} long, cos double")
     bc = spark.sparkContext.broadcast((P, qq, q_bits, qn, int(probe_hamming)))
 
-    def kernel(batches):
-        import numpy as _np
-        import pandas as _pd
-
+    def score(A):
         Pm, q, qb, qnorm, r = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = _stack_quantized(pdf)
-            codes = (A @ Pm.T) >= 0
-            mask = (codes != qb[None, :]).sum(axis=1) <= r
-            n2 = (A * A).sum(axis=1)
-            # zero-norm (cosine undefined) and non-finite (corrupt
-            # components) rows are excluded
-            mask &= _np.isfinite(n2) & (n2 > 0.0)
-            if not mask.any():
-                continue
-            Am = A[mask]
-            cos = (Am @ q) / (_np.sqrt((Am * Am).sum(axis=1)) * qnorm)
-            yield _pd.DataFrame(
-                {id_col: pdf["_id"].to_numpy(dtype=_np.int64)[mask], "_raw": cos}
-            )
+        # zero-norm (cosine undefined) and non-finite (corrupt
+        # components) rows are excluded
+        an, valid = _norms(A)
+        keep = ((((A @ Pm.T) >= 0) != qb[None, :]).sum(axis=1) <= r) & valid
+        return keep, (A[keep] @ q) / (an[keep] * qnorm)
 
-    out = _ids_vectors(df, id_col, vec_col, dim=len(qq)).mapInPandas(
-        kernel,
-        schema=T.StructType(
-            [T.StructField(id_col, T.LongType()), T.StructField("_raw", T.DoubleType())]
-        ),
-    )
-    return (
-        out.orderBy(F.desc("_raw"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, (F.round(F.col("_raw") * QUANT) / QUANT).alias("cos"))
-    )
+    top = _scan_topk(df, len(qq), k, id_col, vec_col, score)
+    return top.select(id_col, (F.round(F.col("_raw") * QUANT) / QUANT).alias("cos"))
 
 
 def ann_topk_e2lsh(
@@ -842,10 +718,9 @@ def ann_topk_e2lsh(
     seed: int = 777,
 ) -> DataFrame:
     """Approximate euclidean top-k via classic E2LSH bucket tables —
-    the oracle-CHECKABLE replacement for the pyspark.ml
-    BucketedRandomProjectionLSH path (`ann_topk_lsh` below), same
-    hash-family idea (Datar et al. p-stable LSH) but deterministic and
-    exact in both engines:
+    the hash family of pyspark.ml's BucketedRandomProjectionLSH (Datar
+    et al. p-stable LSH), made deterministic and exact in both engines
+    so it is oracle-checkable:
 
     - `n_tables` tables of `rows_per_table` seeded quantized projections
       (`random_hyperplanes` — integer-valued, inlined as literals into
@@ -862,8 +737,15 @@ def ann_topk_e2lsh(
     100 TB shape: codes are map-only and storable as cluster keys; a
     query scans only its matching buckets (~1/4 of this fixture set at
     the default geometry, tunable via bucket_width); one Arrow kernel
-    computes codes + distances, and only ≤k survivors per partition feed
-    TakeOrderedAndProject.
+    computes codes + distances (`_scan_topk`), and only ≤k survivors
+    per partition feed TakeOrderedAndProject.
+
+    Degenerate inputs: euclidean distance is defined for a zero vector,
+    so a zero row ranks at its distance ‖q‖ like any other candidate. A
+    NULL/NaN/Inf/extreme component quantizes to NaN (`quantize_np`), its
+    bucket ids are NaN and equal no query bucket, so such a row is never
+    a candidate; ragged rows are excluded with the NULL rows
+    (`_ids_vectors` dim filter).
     """
     import numpy as np
 
@@ -878,73 +760,15 @@ def ann_topk_e2lsh(
         (P, qq, q_buckets, W, int(n_tables), int(rows_per_table))
     )
 
-    def kernel(batches):
-        import numpy as _np
-        import pandas as _pd
-
+    def score(A):
         Pm, q, qb, w, L, g = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = _stack_quantized(pdf)
-            B = _np.floor((A @ Pm.T) / w)
-            match = _np.zeros(len(A), dtype=bool)
-            for t in range(L):
-                sl = slice(t * g, (t + 1) * g)
-                match |= (B[:, sl] == qb[sl][None, :]).all(axis=1)
-            if not match.any():
-                continue
-            Am = A[match]
-            s2 = ((Am - q) ** 2).sum(axis=1)
-            yield _pd.DataFrame(
-                {id_col: pdf["_id"].to_numpy(dtype=_np.int64)[match], "_s2": s2}
-            )
+        # AND within a table (all g buckets equal), OR across the L tables
+        hit = np.floor((A @ Pm.T) / w) == qb[None, :]
+        keep = hit.reshape(len(A), L, g).all(axis=2).any(axis=1)
+        return keep, ((A[keep] - q) ** 2).sum(axis=1)
 
-    out = _ids_vectors(df, id_col, vec_col, dim=dim).mapInPandas(
-        kernel,
-        schema=T.StructType(
-            [T.StructField(id_col, T.LongType()), T.StructField("_s2", T.DoubleType())]
-        ),
-    )
-    return (
-        out.orderBy(F.asc("_s2"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, (F.round(F.sqrt("_s2")) / QUANT).alias("dist"))
-    )
-
-
-def ann_topk_lsh(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 4,
-) -> DataFrame:
-    """Approximate top-k via random-projection LSH buckets.
-
-    At 100 TB the model's hash tables prune the candidate set to the
-    query's buckets; deterministic with the fixed seed. Distance is
-    euclidean (the LSH family's metric); for cosine semantics normalize
-    vectors upstream.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.ml.linalg import Vectors
-
-    feats = df.select(id_col, array_to_vector(as_double(vec_col)).alias("features"))
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=42,
-    )
-    model = lsh.fit(feats)
-    return model.approxNearestNeighbors(feats, Vectors.dense(query_vec), k, distCol="dist").select(
-        id_col, "dist"
-    )
+    top = _scan_topk(df, dim, k, id_col, vec_col, score, ascending=True)
+    return top.select(id_col, (F.round(F.sqrt("_raw")) / QUANT).alias("dist"))
 
 
 def sq8_rerank_topk(
@@ -1174,23 +998,17 @@ def semdedup_map(
         import numpy as _np
         import pandas as _pd
 
-        empty = _pd.DataFrame(
-            {"id_a": [], "id_b": [], "cluster": [], "raw_cos": []}
-        ).astype({"id_a": "int64", "id_b": "int64", "cluster": "int64", "raw_cos": "float64"})
         if len(pdf) < 2:
-            return empty
-        A = _stack_quantized(pdf)
+            return _pd.DataFrame()
         ids = pdf[id_col].to_numpy(dtype=_np.int64)
-        an = _np.sqrt((A * A).sum(axis=1))
         # zero-norm vectors have undefined cosine: they never pair (the
         # valid mask), deterministically — no NaN reaches the comparison
-        valid = _np.isfinite(an) & (an > 0.0)
-        S = (A @ A.T) / (_np.where(valid, an, 1.0)[:, None] * _np.where(valid, an, 1.0)[None, :])
+        S, valid, _ = _cosines(_stack_quantized(pdf))
         ai, bi = _np.nonzero(
             (ids[:, None] < ids[None, :]) & (S >= tau) & valid[:, None] & valid[None, :]
         )
         if not len(ai):
-            return empty
+            return _pd.DataFrame()
         return _pd.DataFrame(
             {"id_a": ids[ai], "id_b": ids[bi], "cluster": int(key[0]), "raw_cos": S[ai, bi]}
         )
@@ -1360,26 +1178,15 @@ def probe_band_index(
         import numpy as _np
         import pandas as _pd
 
-        empty = _pd.DataFrame({"snap_id": [], "corp_id": [], "raw_cos": []}).astype(
-            {"snap_id": "int64", "corp_id": "int64", "raw_cos": "float64"}
-        )
         corp = pdf[pdf["_side"] == 0]
         snap = pdf[pdf["_side"] == 1]
         if not len(corp) or not len(snap):
-            return empty
-        A = _stack_quantized(corp)  # corpus bucket
-        B = _stack_quantized(snap)  # snapshot bucket
-        an = _np.sqrt((A * A).sum(axis=1))
-        bn = _np.sqrt((B * B).sum(axis=1))
-        # zero-norm vectors never pair (undefined cosine) — the
-        # semdedup_map valid-mask discipline; no NaN reaches `>= tau`
-        va, vb = (_np.isfinite(an) & (an > 0.0)), (_np.isfinite(bn) & (bn > 0.0))
-        S = (B @ A.T) / (
-            _np.where(vb, bn, 1.0)[:, None] * _np.where(va, an, 1.0)[None, :]
-        )
+            return _pd.DataFrame()
+        # snapshot rows × corpus bucket-mates; zero-norm vectors never
+        # pair (undefined cosine) — the `_cosines` valid masks, so no
+        # NaN reaches `>= tau`
+        S, vb, va = _cosines(_stack_quantized(snap), _stack_quantized(corp))
         bi, ai = _np.nonzero((S >= tau) & vb[:, None] & va[None, :])
-        if not len(bi):
-            return empty
         return _pd.DataFrame(
             {
                 "snap_id": snap[id_col].to_numpy(dtype=_np.int64)[bi],
@@ -1459,8 +1266,7 @@ def batch_knn(
                 continue
             A = _stack_quantized(pdf)
             ids = pdf["_id"].to_numpy(dtype=_np.int64)
-            an = _np.sqrt((A * A).sum(axis=1))
-            cvalid = _np.isfinite(an) & (an > 0.0)
+            an, cvalid = _norms(A)
             if not cvalid.any():
                 continue
             A, ids, an = A[cvalid], ids[cvalid], an[cvalid]
@@ -1682,12 +1488,11 @@ def ivf_batch_probe(
                 continue
             A = _stack_quantized(pdf)
             ids = pdf["_id"].to_numpy(dtype=_np.int64)
-            an = _np.sqrt((A * A).sum(axis=1))
             cols = pdf["_qrow"].to_numpy(dtype=_np.int64)
             raw = _np.zeros(len(ids), dtype=_np.float64)
             # zero-norm posting/query vectors have undefined cosine: they
             # are EXCLUDED from results deterministically, never NaN-ranked
-            valid = _np.isfinite(an) & (an > 0.0)
+            an, valid = _norms(A)
             an_safe = _np.where(valid, an, 1.0)
             for j in set(cols.tolist()):  # candidate-linear, one BLAS row-block per query
                 m = cols == j
@@ -1790,8 +1595,7 @@ def _assign_cells_precollected(
             if not len(pdf):
                 continue
             A = _stack_quantized(pdf)
-            an = _np.sqrt((A * A).sum(axis=1))
-            valid = _np.isfinite(an) & (an > 0.0)
+            an, valid = _norms(A)
             S = (A @ Cm.T) / (_np.where(valid, an, 1.0)[:, None] * cn_safe[None, :])
             S[:, zcell] = -_np.inf
             # quantized-integer compare, columns pre-sorted by cell id so

@@ -20,64 +20,30 @@ from serverless_etl_reporting_pipeline_spark.plans import sketches  # noqa: F401
 from serverless_etl_reporting_pipeline_spark.plans import pipeline  # noqa: F401, E402
 
 # Registry ORDER is deliberate: the driver's differential oracle verifies
-# the first 50 registry entries per round. Rotation policy for round 13
-# (derived, as every round, from the union of CORRECTNESS_r01-r12 key
-# sets — every query's last driver round; the r12 verdict names this
-# exact cohort in ask #3):
-#   1. _PRIORITY first — what round 13 CHANGED: pipe03 (NEW — pipe02's
-#      persisted-state twin, r12 ask #2) and t20 (its probe operator,
-#      neardup_index_probe, gained the stored-fan discovery path and
-#      the semi-join verify prune this round — the registry plan is
-#      the unchanged non-bounded branch, but the changed-in-round rule
-#      is about the operator). 2 slots.
-#   2. The full r10-era cohort (last driver row round 10, straight
-#      from the CORRECTNESS_r* union; 33 rows, t20 carried in
-#      _PRIORITY): pipe01/pipe02 lead (their shared stage operator
-#      annotate_batch grew the batch_count/100k-gate contract this
-#      round — non-bounded plans unchanged, same conservatism as t20),
-#      then a19, a20, c01-c03, c05, c06, c08, c09, e02-e05, m01-m04,
-#      s02, t07/t09/t11/t15/t19/t24, v05, w03-w05, w09, x01 — the
-#      m-/e-family and multimodal rows' first driver check since r10.
-#      32 slots.
-#   3. Backfill to 50 with r11 rows, the ever-failed queries first
-#      (v04, c07, k01, k02 — green in every check since; re-pinned
-#      whenever they enter the window), then d01-d05, e08, j01-j06.
-#      16 slots.
-#   4. 2 + 32 + 16 fills the window exactly; the remaining r11 rows
-#      (j07, s01, s03-s05, t03/t04/t08/t10/t14/t21-t23, the rest of
-#      the v family, w10, x02/x03/x05) and every r12 row are ≤2 rounds
-#      fresh at r13 close. All deferred rows stay covered every round
-#      by the full-registry sf0.01 oracle run and both sweep modes
-#      (doctored + zero-row).
-# CORPUS POLICY (round-7 verdict ask #8): the corpus is feature-
-# complete (130 entries with pipe03). New queries are capped at ~5 per
-# round so the 50-slot driver window re-verifies every query within
-# ~2.5 rounds; freed slots go to rotation cadence, oldest driver row
-# first. Deferred queries stay covered every round by
-# tools/oracle_check.py (full registry at sf0.01 pre-commit) and the
-# spark.sql conformance test.
-_PRIORITY = (
-    # NEW this round: the persisted-state incremental funnel (r12 ask
-    # #2) — base state built once on disk, the priced query a
-    # fixed-size delta probe against it
-    "pipe03",
-    # operator changed this round: neardup_index_probe gained the
-    # stored band-fan discovery path + the semi-join verify prune
-    "t20",
-)
+# the first 50 registry entries. Rotation policy:
+#   1. _PRIORITY first: queries whose plan or operator changed since the
+#      last driver check.
+#   2. _ROTATION_TAIL next: the other queries, oldest driver check first
+#      (from the union of the CORRECTNESS_r* key sets); queries that
+#      ever failed a driver check are re-pinned when they enter the
+#      window.
+#   3. Everything else follows in registration order.
+# Queries outside the window stay covered every round by the
+# full-registry sf0.01 oracle run (tools/oracle_check.py), both sweep
+# modes (doctored + zero-row) and the spark.sql conformance test.
+# CORPUS POLICY: the corpus is feature-complete (130 entries). New
+# queries are capped at ~5 per round, so the 50-slot window re-verifies
+# every query within ~2.5 rounds.
+_PRIORITY = ("pipe03", "t20")
 
-# rotation cohorts, oldest driver row first (the full r10-era cohort,
-# then the r11 backfill); the driver window is _PRIORITY + this,
-# cut to 50 by the driver itself
+# oldest driver check first; the driver cuts _PRIORITY + this to 50
 _ROTATION_TAIL = (
-    # r10-era (last driver row round 10); pipe01/pipe02 lead — their
-    # shared stage operator (annotate_batch) changed this round
     ("pipe01", "pipe02")
     + ("a19", "a20", "c01", "c02", "c03", "c05", "c06", "c08", "c09")
     + ("e02", "e03", "e04", "e05", "m01", "m02", "m03", "m04", "s02")
     + ("t07", "t09", "t11", "t15", "t19", "t24", "v05")
     + ("w03", "w04", "w05", "w09", "x01")
-    # r11 backfill: the ever-failed four first, then the d/e/j families
+    # the ever-failed queries first, then the d/e/j families
     + ("v04", "c07", "k01", "k02")
     + ("d01", "d02", "d03", "d04", "d05", "e08")
     + ("j01", "j02", "j03", "j04", "j05", "j06")

@@ -28,13 +28,9 @@ from pyspark.sql import functions as F
 # writes the directory layout (see `_fold_segments`): below this a
 # fine-grained key set (the band fan's 2 048 (band, _bkt) values)
 # would shatter a small fold into thousands of KB files whose listing
-# and open cost exceeds a plain scan of the data. 1 GiB default keeps
-# per-dir files ≥ ~512 KB once the layout engages; env-overridable so
-# a cluster deployment (or a layout test) can move the knee without a
-# code change.
-_PARTITION_FOLD_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PARTITION_FOLD_MIN_BYTES", str(1 << 30))
-)
+# and open cost exceeds a plain scan of the data. 1 GiB keeps per-dir
+# files ≥ ~512 KB once the layout engages.
+_PARTITION_FOLD_MIN_BYTES = 1 << 30
 
 
 def _fs_exists(spark: SparkSession, path: str) -> bool:

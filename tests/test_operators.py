@@ -9,12 +9,11 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from serverless_etl_reporting_pipeline_spark.operators.minhash import (
-    minhash_dedup_survivors,
     minhash_neardup_pairs,
     neardup_components,
 )
 from serverless_etl_reporting_pipeline_spark.operators.multimodal import attach_binary, frame_sample, resize
-from serverless_etl_reporting_pipeline_spark.operators.vectors import ann_topk_lsh, knn_bruteforce, quantize_np
+from serverless_etl_reporting_pipeline_spark.operators.vectors import knn_bruteforce, quantize_np
 from serverless_etl_reporting_pipeline_spark.plans import REGISTRY
 from serverless_etl_reporting_pipeline_spark.sources.reader import load_table
 
@@ -33,15 +32,6 @@ def test_minhash_recall_of_true_pairs(spark, sf_dir):
         for r in minhash_neardup_pairs(docs, jaccard_threshold=0.5).collect()
     }
     assert true_pairs <= lsh_pairs
-
-
-def test_minhash_dedup_survivors(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    survivors = minhash_dedup_survivors(docs, jaccard_threshold=0.5)
-    n_docs, n_surv = docs.count(), survivors.count()
-    assert n_surv < n_docs  # planted near-dups removed
-    # keep-lowest policy: the minimum doc_id always survives
-    assert survivors.agg(F.min("doc_id")).collect()[0][0] == 0
 
 
 def test_incremental_neardup_flags_synthetic(spark):
@@ -96,34 +86,17 @@ def test_neardup_components_driver_fold_matches_distributed(spark, monkeypatch):
 
 
 def test_transitive_survivors_collapse_vshapes(spark):
-    """docs 1 and 2 are each near-dups of 3 but not of each other:
-    greedy keep-lowest keeps {1, 2}; connected-components keeps only
-    the component min {1}."""
+    """docs 1 and 2 are each near-dups of 3 but not of each other (a
+    V-shape, so a direct keep-lowest rule would keep {1, 2});
+    connected components keep only the component min {1}."""
     X = [f"x{i}" for i in range(16)]
     Y = [f"y{i}" for i in range(16)]
     rows = [(1, " ".join(X)), (2, " ".join(Y)), (3, " ".join(X[:14] + Y[:14]))]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    greedy = {
-        r["doc_id"] for r in minhash_dedup_survivors(docs, jaccard_threshold=0.4).collect()
-    }
-    trans = {
-        r["doc_id"]
-        for r in minhash_dedup_survivors(docs, jaccard_threshold=0.4, transitive=True).collect()
-    }
-    assert greedy == {1, 2}
-    assert trans == {1}
-
-
-def test_ann_lsh_contains_top1(spark, sf_dir):
-    """LSH approx top-10 (euclidean) should include the exact top-1
-    cosine neighbor for normalized-ish random data — sanity recall."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter("vec_id = 0").select("embedding").collect()[0][0]
-    exact = knn_bruteforce(emb.filter("vec_id != 0"), list(quantize_np(q)), k=10).collect()
-    approx = {r["vec_id"] for r in ann_topk_lsh(emb.filter("vec_id != 0"), q, k=10).collect()}
-    assert len(approx) == 10
-    # weak-but-meaningful recall bound: some overlap with exact top-10
-    assert approx & {r["vec_id"] for r in exact}
+    pairs = minhash_neardup_pairs(docs, jaccard_threshold=0.4)
+    assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == {(1, 3), (2, 3)}
+    losers = {r["id"] for r in neardup_components(pairs).collect() if r["lbl"] < r["id"]}
+    assert {r[0] for r in rows} - losers == {1}
 
 
 def test_ann_e2lsh_prunes_and_recalls(spark, sf_dir):
@@ -698,10 +671,13 @@ def test_zero_norm_vectors_never_ranked(spark):
     sq8_rerank_topk, batch_knn, ivf_topk, the pair grids and the band-index
     probe) must follow the ivf_batch_probe valid-mask discipline — a
     zero-norm corpus vector is excluded from every ranking, a zero-norm
-    query yields no rows, and no NaN ever reaches a comparison."""
+    query yields no rows, and no NaN ever reaches a comparison. The
+    euclidean ann_topk_e2lsh shares the top-k scan core: corrupt rows are
+    never returned, and a zero vector ranks at its defined distance."""
     import math
 
     from serverless_etl_reporting_pipeline_spark.operators.vectors import (
+        ann_topk_e2lsh,
         ann_topk_rp,
         batch_knn,
         ivf_topk,
@@ -712,7 +688,6 @@ def test_zero_norm_vectors_never_ranked(spark):
         quantize_np,
         sq8_rerank_topk,
         top_similar_pairs,
-        top_similar_pairs_broadcast,
     )
 
     schema = "vec_id long, embedding array<float>, label long"
@@ -745,6 +720,27 @@ def test_zero_norm_vectors_never_ranked(spark):
     assert len(rows) == 3 and not any(math.isnan(r["cos"]) for r in rows)
     assert sq8_rerank_topk(df, [0.0, 0.0], k=5).collect() == []
 
+    # NaN, Inf and >1e12 components and a ragged row never reach a
+    # top-k result; euclidean E2LSH ranks the zero vector at ||q|| = 1
+    df_bad = df.unionByName(
+        spark.createDataFrame(
+            [
+                (8, [float("inf"), 1.0], 0),
+                (9, [float("nan"), 1.0], 0),
+                (10, [1e13, 1.0], 0),
+                (11, [1.0, 0.0, 0.0], 0),  # ragged
+            ],
+            schema,
+        )
+    )
+    for fn in (knn_bruteforce, ann_topk_rp):
+        got = [r[0] for r in fn(df_bad, q, k=20).collect()]
+        assert got and not {3, 8, 9, 10, 11} & set(got), fn.__name__
+    e2 = ann_topk_e2lsh(df_bad, q, k=20, n_tables=4, rows_per_table=1, bucket_width=1e14)
+    assert [(r["vec_id"], r["dist"]) for r in e2.collect()] == [
+        (1, 0.0), (2, 0.001414), (3, 1.0), (4, 1.414214)
+    ]
+
     # batched kNN: zero corpus row in no ranking, zero query qid absent
     queries = spark.createDataFrame(
         [(100, [1.0, 0.0]), (101, [0.0, 0.0])], "qid long, embedding array<float>"
@@ -755,16 +751,14 @@ def test_zero_norm_vectors_never_ranked(spark):
     assert not any(math.isnan(r["cos"]) for r in rows)
 
     # all-pairs / banded / probe shapes: the zero row never pairs
-    for fn in (top_similar_pairs, top_similar_pairs_broadcast):
-        pairs = fn(df, k=20).collect()
-        assert len(pairs) == 6 and all(3 not in (r["id_a"], r["id_b"]) for r in pairs), fn.__name__
-        assert not any(math.isnan(r["raw_cos"]) for r in pairs), fn.__name__
+    pairs = top_similar_pairs(df, k=20).collect()
+    assert len(pairs) == 6 and all(3 not in (r["id_a"], r["id_b"]) for r in pairs)
+    assert not any(math.isnan(r["raw_cos"]) for r in pairs)
 
     # Inf/NaN-COMPONENT rows (the doctored row-900009 class) must be
-    # excluded by BOTH pair variants — an Inf build row has norm = inf,
-    # and without the isfinite mask its pairs score ±inf/NaN and rank
-    # FIRST under the -cos lexsort (the r10 ADVICE find on the
-    # broadcast path's build-side mask)
+    # excluded — an Inf row has norm = inf, and without the isfinite
+    # mask its pairs score ±inf/NaN and rank FIRST under the -cos
+    # lexsort
     df_inf = spark.createDataFrame(
         [
             (1, [1.0, 0.0], 0),
@@ -774,10 +768,9 @@ def test_zero_norm_vectors_never_ranked(spark):
         ],
         schema,
     )
-    for fn in (top_similar_pairs, top_similar_pairs_broadcast):
-        pairs = fn(df_inf, k=20).collect()
-        assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)], fn.__name__
-        assert math.isfinite(pairs[0]["raw_cos"]), fn.__name__
+    pairs = top_similar_pairs(df_inf, k=20).collect()
+    assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]
+    assert math.isfinite(pairs[0]["raw_cos"])
     dups = neardup_map(df, threshold=0.9).collect()
     assert [(r["dup_id"], r["kept_id"]) for r in dups] == [(2, 1)]
     banded = neardup_pairs_lsh_banded(df, threshold=-1.0).collect()
